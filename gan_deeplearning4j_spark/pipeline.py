@@ -9,9 +9,10 @@ Re-expression of the reference's distributed adversarial training:
   on their shard (map), then the driver takes the element-wise mean of worker
   parameters (reduce) — exactly ParameterAveragingTrainingMaster semantics
   (java:324-330, averagingFrequency=10, batchSizePerWorker=200). The map side
-  is ``applyInPandas`` over a worker-id grouping; the reduce side is the A1
-  aggregate (groupBy(layer,param,pos).avg) — or a driver-side numpy mean when
-  the collected weight set is tiny (it always is relative to data).
+  is ``applyInPandas`` over a worker-id grouping that returns one tensor row
+  per trained tensor; the reduce side is the A1 average, a numpy mean over the
+  k collected rows of each tensor (``rows_to_weights``). The driver receives
+  k × P float64 values per round, P = trained parameter count.
 - J1 weight sync    → ``copy_weights_dict`` (name-mapped parameter copy,
   java:429-460/:474-510/:516-542); the DataFrame form lives in
   operators/weights.py.
@@ -159,9 +160,19 @@ def rmsprop_update(
 
 
 # ---------------------------------------------------------------------------
-# weights dict ⇄ long-form DataFrame (the J1/A1 data model)
+# weights dict ⇄ tensor rows (the J1/A1 data model)
 # ---------------------------------------------------------------------------
 
+# A tensor row is one parameter tensor, flattened: (layer, param, value).
+TENSOR_SCHEMA = T.StructType(
+    [
+        T.StructField("layer", T.StringType()),
+        T.StructField("param", T.StringType()),
+        T.StructField("value", T.ArrayType(T.DoubleType())),
+    ]
+)
+
+# The checkpoint's long form: one row per scalar parameter.
 WEIGHTS_SCHEMA = T.StructType(
     [
         T.StructField("layer", T.StringType()),
@@ -172,26 +183,39 @@ WEIGHTS_SCHEMA = T.StructType(
 )
 
 
-def weights_to_rows(weights: Weights) -> list[tuple]:
-    rows = []
-    for layer, params in weights.items():
-        for pname, arr in params.items():
-            for pos, v in enumerate(np.asarray(arr, dtype=np.float64).ravel()):
-                rows.append((layer, pname, pos, float(v)))
-    return rows
+def tensor_rows(weights: Weights) -> list[tuple[str, str, np.ndarray]]:
+    """One (layer, param, float64 values) row per parameter tensor."""
+    return [
+        (layer, pname, np.asarray(arr, dtype=np.float64).ravel())
+        for layer, params in weights.items()
+        for pname, arr in params.items()
+    ]
 
 
-def rows_to_weights(rows, shapes: dict[str, dict[str, tuple]]) -> Weights:
-    flat: dict[tuple[str, str], dict[int, float]] = {}
-    for layer, pname, pos, v in rows:
-        flat.setdefault((layer, pname), {})[pos] = v
+def rows_to_weights(rows: pd.DataFrame, shapes: dict[str, dict[str, tuple]]) -> Weights:
+    """A1 average of one round's tensor rows (columns worker, layer, param,
+    value): each tensor's rows are stacked in worker-key order and averaged
+    in float64, then cast to float32. ``shapes`` names exactly the tensors
+    the round trained. Raises ValueError unless every worker sent one row of
+    the right length for each of those tensors and nothing else."""
+    rows = rows.sort_values("worker", kind="stable")
+    workers = rows["worker"].unique().tolist()
+    want = {(layer, p) for layer, ps in shapes.items() for p in ps}
+    got = set(zip(rows["layer"], rows["param"]))
+    if got != want:
+        raise ValueError(f"tensor rows missing {sorted(want - got)}, unknown {sorted(got - want)}")
     out: Weights = {}
-    for (layer, pname), posmap in flat.items():
+    for (layer, pname), group in rows.groupby(["layer", "param"], sort=False):
+        if group["worker"].tolist() != workers:
+            raise ValueError(f"{layer}.{pname}: rows from workers {group['worker'].tolist()}, "
+                             f"expected one from each of {workers}")
         shape = shapes[layer][pname]
-        arr = np.zeros(int(np.prod(shape)), dtype=np.float32)
-        for pos, v in posmap.items():
-            arr[pos] = v
-        out.setdefault(layer, {})[pname] = arr.reshape(shape)
+        values = group["value"].tolist()
+        for v in values:
+            if len(v) != math.prod(shape):
+                raise ValueError(f"{layer}.{pname}: {len(v)} values for shape {shape}")
+        mean = np.mean(np.stack(values).astype(np.float64), axis=0)
+        out.setdefault(layer, {})[pname] = mean.astype(np.float32).reshape(shape)
     return out
 
 
@@ -236,26 +260,26 @@ def fit_distributed(
     """One averaging round (averagingFrequency=local_steps, java:326):
     shard → local RMSProp steps per worker → element-wise parameter mean.
 
-    Returns the mean final local loss across workers. Updates net.weights
-    in place (the reference's TrainingMaster mutates the wrapped net).
+    Each worker returns one tensor row per trained tensor with its key and
+    final local loss; the driver collects them through Arrow and averages
+    them with ``rows_to_weights``. Driver-side bound: k × P float64 values
+    per round, P = trained parameter count (about 1.7 MB per network of the
+    784-feature GAN at k=2).
+
+    Returns the mean final local loss across workers, in worker-key order.
+    Updates net.weights in place (the reference's TrainingMaster mutates the
+    wrapped net); an empty ``df`` leaves them as they are and returns nan.
     """
     spark = df.sparkSession
     specs, lr_by_layer = net.specs, net.lr_by_layer
-    shapes = net.shapes()
+    trained = {layer: s for layer, s in net.shapes().items() if lr_by_layer.get(layer, 0.0) != 0.0}
     bc_w = spark.sparkContext.broadcast(net.weights)
 
     sharded = df.withColumn(
         "__worker", F.pmod(F.xxhash64(F.monotonically_increasing_id(), F.lit(seed)), F.lit(n_workers))
     )
-
     out_schema = T.StructType(
-        [
-            T.StructField("layer", T.StringType()),
-            T.StructField("param", T.StringType()),
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("loss", T.DoubleType()),
-        ]
+        [T.StructField("worker", T.LongType()), *TENSOR_SCHEMA.fields, T.StructField("loss", T.DoubleType())]
     )
 
     def local_fit(key, pdf):
@@ -269,26 +293,17 @@ def fit_distributed(
             idx = rng.choice(len(x), size=min(batch_size, len(x)), replace=False)
             grads, loss = mlp_grads(x[idx], y[idx], specs, w)
             rmsprop_update(w, grads, cache, lr_by_layer)
-        rows = weights_to_rows({l: w[l] for l in w if lr_by_layer.get(l, 0.0) != 0.0})
-        out = pd.DataFrame(rows, columns=["layer", "param", "pos", "value"])
+        out = pd.DataFrame(tensor_rows({l: w[l] for l in trained}), columns=TENSOR_SCHEMA.names)
+        out.insert(0, "worker", int(key[0]))
         out["loss"] = loss
         return out
 
-    long_form = sharded.groupBy("__worker").applyInPandas(local_fit, out_schema)
-    # A1: element-wise mean across workers (+ mean loss piggybacked)
-    averaged = (
-        long_form.groupBy("layer", "param", "pos")
-        .agg(F.avg("value").alias("value"), F.avg("loss").alias("loss"))
-        .collect()
-    )
-    mean_loss = float(averaged[0]["loss"]) if averaged else math.nan
-    updated = rows_to_weights(
-        [(r["layer"], r["param"], r["pos"], r["value"]) for r in averaged],
-        shapes,
-    )
-    net.weights.update(updated)
+    rows = sharded.groupBy("__worker").applyInPandas(local_fit, out_schema).toPandas()
     bc_w.unpersist()
-    return mean_loss
+    if rows.empty:
+        return math.nan
+    net.weights.update(rows_to_weights(rows, trained))
+    return float(np.mean(rows.drop_duplicates("worker").sort_values("worker")["loss"].to_numpy()))
 
 
 # ---------------------------------------------------------------------------
@@ -315,32 +330,30 @@ class GanPipeline:
         gen_lr: float = 0.004,   # java:85 (gan_learning_rate drives gen)
         seed: int = DEFAULT_SEED,
     ):
+        dis_specs = build_mlp("dis", feature_dim, dis_hidden or [128, 64], 1, "sigmoid")
+        gen_specs = build_mlp("gen", latent_dim, gen_hidden or [64, 128], feature_dim, "sigmoid")
+        self._assemble(dis_specs, feature_dim, gen_specs, feature_dim, latent_dim,
+                       n_classes, dis_lr, gen_lr, seed)
+
+    def _assemble(self, dis_specs, dis_input, gen_specs, feature_dim, latent_dim,
+                  n_classes, dis_lr, gen_lr, seed) -> None:
         self.feature_dim = feature_dim
         self.latent_dim = latent_dim
         self.n_classes = n_classes
         self.seed = seed
-        dis_hidden = dis_hidden or [128, 64]
-        gen_hidden = gen_hidden or [64, 128]
-
-        dis_specs = build_mlp("dis", feature_dim, dis_hidden, 1, "sigmoid")
-        gen_specs = build_mlp("gen", latent_dim, gen_hidden, feature_dim, "sigmoid")
         self.dis = Network(
-            dis_specs,
-            init_weights(dis_specs, feature_dim, seed),
-            {s.name: dis_lr for s in dis_specs},
+            dis_specs, init_weights(dis_specs, dis_input, seed), {s.name: dis_lr for s in dis_specs}
         )
         self.gen = Network(
-            gen_specs,
-            init_weights(gen_specs, latent_dim, seed + 1),
-            {s.name: gen_lr for s in gen_specs},
+            gen_specs, init_weights(gen_specs, latent_dim, seed + 1), {s.name: gen_lr for s in gen_specs}
         )
         # gan = gen stack + dis stack with dis frozen (lr 0.0, java:84 + :277-308)
-        gan_specs = gen_specs + dis_specs
-        gan_weights = {**{k: {p: a.copy() for p, a in v.items()} for k, v in self.gen.weights.items()},
-                       **{k: {p: a.copy() for p, a in v.items()} for k, v in self.dis.weights.items()}}
+        gan_weights = {
+            k: {p: a.copy() for p, a in v.items()}
+            for k, v in {**self.gen.weights, **self.dis.weights}.items()
+        }
         self.gan = Network(
-            gan_specs,
-            gan_weights,
+            gen_specs + dis_specs, gan_weights,
             {**{s.name: gen_lr for s in gen_specs}, **{s.name: 0.0 for s in dis_specs}},
         )
         self.cv: Network | None = None
@@ -368,7 +381,8 @@ class GanPipeline:
         LayerSpec("...", "batchnorm"); kept out of the default topology for
         step-time economy — add them to the spec lists to match exactly.)
         """
-        assert side % 4 == 0, "side must be divisible by 4 (two stride/upsample 2s)"
+        if side % 4:
+            raise ValueError(f"side must be divisible by 4 (two stride/upsample 2s), got {side}")
         f = base_filters
         dis_specs = [
             LayerSpec("dis_reshape", "reshape", {"shape": (1, side, side)}),
@@ -389,29 +403,8 @@ class GanPipeline:
             LayerSpec("gen_flat", "flatten"),
         ]
         self = cls.__new__(cls)
-        self.feature_dim = side * side
-        self.latent_dim = latent_dim
-        self.n_classes = n_classes
-        self.seed = seed
-        self.dis = Network(
-            dis_specs, init_weights(dis_specs, (1, side, side), seed),
-            {s.name: dis_lr for s in dis_specs},
-        )
-        self.gen = Network(
-            gen_specs, init_weights(gen_specs, latent_dim, seed + 1),
-            {s.name: gen_lr for s in gen_specs},
-        )
-        gan_specs = gen_specs + dis_specs
-        gan_weights = {
-            **{k: {p: a.copy() for p, a in v.items()} for k, v in self.gen.weights.items()},
-            **{k: {p: a.copy() for p, a in v.items()} for k, v in self.dis.weights.items()},
-        }
-        self.gan = Network(
-            gan_specs, gan_weights,
-            {**{s.name: gen_lr for s in gen_specs}, **{s.name: 0.0 for s in dis_specs}},
-        )
-        self.cv = None
-        self.history = []
+        self._assemble(dis_specs, (1, side, side), gen_specs, side * side, latent_dim,
+                       n_classes, dis_lr, gen_lr, seed)
         return self
 
     # -- O4 steps -----------------------------------------------------------
@@ -584,15 +577,18 @@ class GanPipeline:
 
     def checkpoint(self, spark: SparkSession, path: str) -> None:
         """Weights → parquet + config JSON (engine artifact format; replaces
-        ModelSerializer zips, java:605-618)."""
+        ModelSerializer zips, java:605-618). Each network's tensor rows are
+        exploded in the JVM into the long form: one ``WEIGHTS_SCHEMA`` row
+        per parameter."""
         os.makedirs(path, exist_ok=True)
         for name, net in [("dis", self.dis), ("gen", self.gen), ("gan", self.gan)] + (
             [("cv", self.cv)] if self.cv else []
         ):
-            rows = weights_to_rows(net.weights)
-            spark.createDataFrame(rows, WEIGHTS_SCHEMA).write.mode("overwrite").parquet(
-                f"{path}/{name}_weights.parquet"
-            )
+            # list values: createDataFrame takes them with Arrow on or off
+            rows = [(layer, p, v.tolist()) for layer, p, v in tensor_rows(net.weights)]
+            spark.createDataFrame(pd.DataFrame(rows, columns=TENSOR_SCHEMA.names), TENSOR_SCHEMA).select(
+                "layer", "param", F.posexplode_outer("value").alias("pos", "value")
+            ).write.mode("overwrite").parquet(f"{path}/{name}_weights.parquet")
             cfg = [
                 {"name": s.name, "kind": s.kind, "cfg": s.cfg} for s in net.specs
             ]
