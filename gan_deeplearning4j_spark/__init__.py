@@ -15,7 +15,11 @@ Layout:
 - ``kernels``    pandas-UDF tensor kernels (dense, conv2d, pool, upsample)
 - ``pipeline``   GAN pipeline orchestration (graph builder, fit loop, transfer)
 - ``streaming``  Structured Streaming facades (tumbling windows over events)
-- ``queries``    the registry backing __spark_entry__.py and bench.py
+- ``registry``   ``Query``, ``REGISTRY`` and the one ``register`` decorator
+                 every query module uses (imports no query module)
+- ``queries``    the registry backing __spark_entry__.py and bench.py:
+                 core queries + the fixed-order import of the other
+                 ``queries_*`` modules
 """
 
 __version__ = "0.1.0"

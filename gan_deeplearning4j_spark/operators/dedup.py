@@ -424,13 +424,13 @@ def minhash_lsh_candidates(
     ``features`` lets callers share one ``minhash_features`` relation between
     candidate generation and verification.
 
-    Shape: ONE shuffle — groupBy(bucket) with a pair-emitting applyInPandas
-    kernel (ids only, two longs per emitted pair) — plus the small distinct
-    on pairs. The previous form (hot-key count + anti-join + bucket
-    self-join) paid three evaluations of the banded subtree and two extra
-    shuffles for the same output; the in-kernel ``len > max_bucket`` check
-    subsumes the hot-key cap exactly (drop the whole bucket). Skew safety:
-    a bucket is at most ``max_bucket`` ids — bounded memory per group."""
+    Shape: ONE bucket-keyed shuffle — a count window over (band_id,
+    band_hash) drops singleton and over-``max_bucket`` buckets, then
+    ``collect_list`` gathers the surviving ids per bucket (same
+    partitioning, no second exchange) and ``bucket_id_pairs`` expands
+    each list into its (id_a < id_b) pairs with array expressions — plus
+    the small distinct on pairs. Skew safety: no id list ever holds more
+    than ``max_bucket`` ids, and the window's partition buffer spills."""
     rows_per_band = num_hashes // bands
     if features is None:
         features = minhash_features(df, text_col, id_col, num_hashes)

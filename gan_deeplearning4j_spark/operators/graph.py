@@ -426,12 +426,12 @@ def katz_scores(
 
     Scale shape (r14: the pagerank_fixed contract propagated — r13
     verdict ask #8): the undirected edge list is materialized once,
-    its count observed during that job deciding the join strategy;
-    the O(nodes) score vector is broadcast into the per-iteration edge
-    join under ``broadcast_nodes_max`` (edge-count-tested — a free
-    conservative bound on nodes) with lineage left unmaterialized
-    between ``checkpoint_every`` rounds, and falls back to a shuffled
-    join with per-round checkpoints above it (an unmaterialized
+    and its node count (``approx_count_distinct``, observed during that
+    job) decides the join strategy. At most ``broadcast_nodes_max``
+    nodes, the O(nodes) score vector is broadcast into the per-iteration
+    edge join with lineage left unmaterialized between
+    ``checkpoint_every`` rounds; above it the join falls back to a
+    shuffled join with per-round checkpoints (an unmaterialized
     shuffled-join chain re-derives prior rounds — the r6 4x lesson).
     Round 1 is join-free: score_0 is the constant 1e6, so
     score_1(u) = 1e6 + (deg(u)*1e6) div 2 straight off the edge list

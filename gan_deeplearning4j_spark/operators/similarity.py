@@ -316,7 +316,7 @@ def embedding_neardup_lsh(
     singleton and over-``max_bucket`` rows FIRST, then ``collect_list``
     of (id, vector) structs over the same partitioning (no second
     exchange: the aggregate reuses the window's clustering) builds only
-    the surviving buckets, and one ``mapInPandas`` pass scores them —
+    the surviving buckets, and one ``mapInArrow`` pass scores them —
     one numpy matmul per bucket, one Arrow crossing per batch of
     buckets (r13/r14 optimization passes, guide §4/§5). The previous
     ``applyInPandas`` form dispatched a pandas kernel per GROUP (~8k

@@ -1,53 +1,15 @@
-"""Round-11 wave — written during round 10, registered in round 11.
-
-Same staging pattern as queries_r7/r8/r9/r10 (see their module docstrings):
-these queries stayed behind ``SPARK_GRAFT_R11=1`` through round 10 so the
-round-10 driver window stayed pinned to its never-green prefix; once
-CORRECTNESS_r10 came back 50/50 green, round 11 made registration
-unconditional (module bottom). Round-12 staging continues in
-queries_r12.py behind ``SPARK_GRAFT_R12``.
+"""Round-11 wave — written during round 10, registered in round 11 once
+CORRECTNESS_r10 came back 50/50 green.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.money import cents_nonneg
 
-from .queries import _t
-
-# name -> (fn, oracle, headline, doc); materialized into the real registry
-# by register_all() at the module bottom (kept as a dict so the integrity
-# tests can enumerate the wave independently of the registry).
-STAGED: dict[str, tuple] = {}
-
-
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
+from .registry import _t, register
 
 
 # ---------------------------------------------------------------------------
@@ -119,9 +81,9 @@ def _sql_arr(row) -> str:
     return "[" + ", ".join(repr(v) for v in row) + "]::DOUBLE[]"
 
 
-@_stage(
+@register(
     "lsh_multiprobe_topk",
-    oracle=None,  # bound after definition (generator needs _sql_arr above)
+    oracle=_lsh_multiprobe_oracle(),
     doc="Multi-probe LSH ANN, 2-bit perturbation depth (Lv et al., "
         "VLDB'07): the recall knob for lsh_bucketed_topk past the 1-bit "
         "flips — probes=16 on bits=8 probes the home bucket, all 8 1-bit "
@@ -147,17 +109,11 @@ def q_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"))
 
 
-STAGED["lsh_multiprobe_topk"] = (
-    q_lsh_multiprobe_topk, _lsh_multiprobe_oracle(),
-    STAGED["lsh_multiprobe_topk"][2], STAGED["lsh_multiprobe_topk"][3],
-)
-
-
 # ---------------------------------------------------------------------------
 # Skew ladder demos: salted two-phase aggregation + halo-chunked RANGE frame
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "salted_agg_user_value",
     oracle="""
     SELECT user_id,
@@ -188,7 +144,7 @@ def q_salted_agg_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "range_frame_halo_1h",
     oracle="""
     WITH f AS (
@@ -237,7 +193,7 @@ def q_range_frame_halo_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental MinHash dedup against a persisted signature store
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "minhash_incremental_resume",
     oracle="""
     WITH sh AS (
@@ -348,7 +304,7 @@ def q_minhash_incremental_resume(spark: SparkSession,
 # Corpus novelty decay + watermark lateness audit
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "ngram_novelty_by_batch",
     oracle="""
     WITH g AS (
@@ -420,7 +376,7 @@ def q_ngram_novelty_by_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "watermark_lateness_audit",
     oracle="""
     WITH m AS (
@@ -499,7 +455,7 @@ def q_watermark_lateness_audit(spark: SparkSession,
 # CDC net-effect compaction + two planning advisors
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "cdc_net_effect_compact",
     oracle="""
     WITH base AS (
@@ -574,7 +530,7 @@ def q_cdc_net_effect_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "partition_size_advisor",
     oracle="""
     WITH est AS (
@@ -647,7 +603,7 @@ def q_partition_size_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("tbl")
 
 
-@_stage(
+@register(
     "rendezvous_hash_routing",
     oracle="""
     WITH scored AS (
@@ -753,9 +709,9 @@ def _hot_bucket_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "hot_bucket_cap_audit",
-    oracle=None,  # bound below (generator wraps simhash_portable_oracle)
+    oracle=_hot_bucket_oracle(),
     doc="LSH bucket observability — the study behind every max_bucket cap "
         "in the dedup family: SimHash 15-bit band buckets are profiled "
         "per band (bucket count, max size, count past the cap, exact "
@@ -792,13 +748,7 @@ def q_hot_bucket_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED["hot_bucket_cap_audit"] = (
-    q_hot_bucket_cap_audit, _hot_bucket_oracle(),
-    STAGED["hot_bucket_cap_audit"][2], STAGED["hot_bucket_cap_audit"][3],
-)
-
-
-@_stage(
+@register(
     "session_gap_histogram",
     oracle="""
     WITH g AS (
@@ -865,7 +815,7 @@ def q_session_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding-table health + snapshot version diff
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "embedding_batch_drift",
     oracle="""
     WITH e AS (
@@ -933,7 +883,7 @@ def q_embedding_batch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "snapshot_diff_audit",
     oracle="""
     WITH early AS (
@@ -1073,9 +1023,9 @@ def _bbit_minhash_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "bbit_minhash_estimate",
-    oracle=None,  # bound below
+    oracle=_bbit_minhash_oracle(),
     doc="b-bit MinHash (Li & Koenig, WWW'10): 16 one-bit minwise hashes "
         "pack a resemblance sketch into TWO BYTES per doc — 128x smaller "
         "than the 32-long signature the store persists — at the cost of "
@@ -1147,13 +1097,7 @@ def q_bbit_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED["bbit_minhash_estimate"] = (
-    q_bbit_minhash_estimate, _bbit_minhash_oracle(),
-    STAGED["bbit_minhash_estimate"][2], STAGED["bbit_minhash_estimate"][3],
-)
-
-
-@_stage(
+@register(
     "merkle_range_diff",
     oracle="""
     WITH a AS (
@@ -1240,7 +1184,7 @@ def q_merkle_range_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Max-min fair share + CBO cardinality feedback
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "fair_share_waterfill",
     oracle="""
     WITH d AS (
@@ -1341,7 +1285,7 @@ def q_fair_share_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "join_cardinality_qerror",
     oracle="""
     WITH stats AS (
@@ -1425,10 +1369,3 @@ def q_join_cardinality_qerror(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "edge string, est long, actual long, qerror_e3 long"
     ).orderBy("edge")
-
-
-# Self-register unconditionally (round 11: the gate was flipped after
-# CORRECTNESS_r10 came back 50/50 green — same lifecycle as
-# queries_r7/r8/r9/r10). register_all() is idempotent, so the historical
-# double-import path (queries.py import + direct test import) stays safe.
-register_all()

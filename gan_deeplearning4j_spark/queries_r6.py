@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .functions.money import cents_nonneg
 
-from .queries import _t, register
+from .registry import _t, register
 
 # ---------------------------------------------------------------------------
 # Fixed-point ANN twins (IVF flat + hyperplane LSH)

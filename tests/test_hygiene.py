@@ -16,11 +16,17 @@
    ``events_session_window`` DuckDB oracle encodes the same rule (new
    session only when diff is STRICTLY greater than the gap) — this test is
    the empirical pin for that exact-boundary agreement (ADVICE r3).
+
+3. One registration mechanism: no source file mentions the retired
+   staging machinery (per-module staging dicts, their bulk registration
+   helper, or the environment gates that once enabled them).
 """
 
 from __future__ import annotations
 
 import datetime
+import pathlib
+import re
 
 from pyspark.sql import functions as F
 
@@ -167,3 +173,17 @@ def test_scratch_dir_queries_materialize_before_rmtree():
     )
     # the pin only means something while the pattern has users
     assert seen_pattern_users >= 3, seen_pattern_users
+
+
+def test_no_retired_staging_scaffolding():
+    root = pathlib.Path(__file__).resolve().parents[1]
+    retired = re.compile(r"SPARK_GRAFT_R[0-9]|register_all|_stage\(|STAGED")
+    me = pathlib.Path(__file__).resolve()
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for top in ("gan_deeplearning4j_spark", "tests", "scripts")
+        for path in sorted((root / top).rglob("*.py")) if path != me
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if retired.search(line)
+    ]
+    assert hits == []

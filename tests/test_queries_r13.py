@@ -11,13 +11,11 @@ from collections import defaultdict
 
 import pandas as pd
 
-# import order matters: queries modules are re-entered by queries.py
-import gan_deeplearning4j_spark.queries  # noqa: F401
-from gan_deeplearning4j_spark.queries_r13 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def _cents(x):
@@ -144,18 +142,14 @@ def test_regexp_position_family_matches_python(spark, sf_dir):
 
 
 def test_r13_queries_registered_live():
-    """Round-12 flip (r11 verdict ask #2): every queries_r13 entry is now
-    LIVE in the registry — registered by NAME and by object identity, all
-    oracled."""
+    """All eight queries_r13 entries are in the registry, each oracled."""
     from gan_deeplearning4j_spark import queries_r13
-    from gan_deeplearning4j_spark.queries import REGISTRY
 
-    staged = set(queries_r13.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    for name, (fn, oracle, headline, doc) in queries_r13.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].fn is fn, name
-        assert REGISTRY[name].oracle == oracle, name
+    mine = {n: q for n, q in REGISTRY.items()
+            if q.fn.__module__ == queries_r13.__name__}
+    assert len(mine) == 8, sorted(mine)
+    for name, q in mine.items():
+        assert q.oracle, name
 
 
 def test_bround_half_even_matches_python(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""Round-13 wave pins (queries_r15.py, flipped LIVE in round 13):
+"""Round-13 wave pins (queries_r15.py, registered in round 13):
 pure-python replays for the Spark-4-surface + embedding-audit wave —
 hash parity is covered by the driver replica; these pin the SEMANTICS
 against an independent reimplementation (numpy/stdlib)."""
@@ -12,13 +12,17 @@ from functools import reduce
 import numpy as np
 import pandas as pd
 
-# import order matters: queries modules are re-entered by queries.py
-import gan_deeplearning4j_spark.queries  # noqa: F401
-from gan_deeplearning4j_spark.queries_r15 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
+
+from registry_waves import (
+    assert_wave_in_window,
+    assert_wave_oracles_bind,
+    assert_wave_registered,
+)
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def test_grouping_id_rollup_matches_python(spark, sf_dir):
@@ -201,62 +205,21 @@ def test_matryoshka_truncation_matches_python(spark, sf_dir):
 
 
 def test_r15_wave_is_registered_live():
-    """The round-13 flip: every queries_r15 entry is LIVE in the
-    registry — registered by NAME, by object identity, and with its
-    EXACT oracle (register_all now RAISES on foreign collisions, but the
-    identity assertions stay as the belt to that suspender)."""
-    from gan_deeplearning4j_spark import queries_r15
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r15.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    for name, (fn, oracle, headline, doc) in queries_r15.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].fn is fn, name
-        assert REGISTRY[name].oracle == oracle, name
+    """Every queries_r15 query is live in the registry with an oracle and
+    a doc, registered with the module's own builder object."""
+    assert_wave_registered("queries_r15")
 
 
 def test_r15_driver_window_covers_every_unverified_entry():
-    """Round-13 window contract after the flip: every never-green entry
-    (the 10 r15 queries plus any r16 wave registered later this round)
-    sorts to the front of queries() and fits the driver's 50 slots."""
-    from gan_deeplearning4j_spark import queries_r15
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50
-    assert ordered[: len(never)] == never
-    for name in queries_r15.STAGED:
-        assert name in ev or name in never[:50], name
+    """Every unverified queries_r15 query sits inside the driver's first
+    50 `queries()` positions."""
+    assert_wave_in_window("queries_r15")
 
 
 def test_r15_staged_oracles_bind_in_duckdb(sf_dir):
-    """Round-13 wave oracles must keep binding in DuckDB (EXPLAIN
-    only) — catches SQL bitrot without running anything."""
-    import duckdb
-
-    from gan_deeplearning4j_spark import queries_r15
-    from gan_deeplearning4j_spark.io import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    bad = []
-    for name, (fn, oracle, headline, doc) in queries_r15.STAGED.items():
-        if not oracle:
-            continue
-        try:
-            con.sql("EXPLAIN " + oracle)
-        except Exception as exc:  # noqa: BLE001
-            bad.append((name, str(exc)[:120]))
-    assert not bad, bad
+    """Every queries_r15 oracle binds in DuckDB (EXPLAIN only) — catches
+    SQL bitrot without running anything."""
+    assert_wave_oracles_bind("queries_r15", sf_dir)
 
 
 def test_corr_covar_bracket_matches_python(spark, sf_dir):

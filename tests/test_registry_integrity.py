@@ -1,15 +1,23 @@
 """Registry-wide integrity net: every entry documented, every oracle
 binds in DuckDB (EXPLAIN only — catches SQL bitrot without running
-anything), names stay stable snake_case."""
+anything), names stay stable snake_case and unique, and the registry
+order does not depend on which query module is imported first."""
 
 from __future__ import annotations
 
 import re
 
 import duckdb
+import pytest
 
 from gan_deeplearning4j_spark.io import TABLES
 from gan_deeplearning4j_spark.queries import REGISTRY
+
+from registry_waves import (
+    assert_wave_in_window,
+    assert_wave_oracles_bind,
+    assert_wave_registered,
+)
 
 
 def test_every_query_is_documented_and_named_sanely():
@@ -99,367 +107,166 @@ def test_headline_set_is_stable_and_registered():
         assert anchor in hs, anchor
 
 
-def test_r7_driver_window_covers_every_unverified_entry():
-    """Round-7 window contract: every entry without a green driver row must
-    sit inside the first 50 `queries()` positions — the driver checks
-    ~50/round, so this guarantees CORRECTNESS_r07 gives the whole tail a
-    row. Unverified entries lacking driver evidence = the 20 newly
-    registered round-7 queries plus any round-7 additions; rows-only
-    entries that already returned rows in past windows sort after fresh
-    oracled ones. Fails if a new query lands ahead of the tail or the tail
-    outgrows the window (stage behind SPARK_GRAFT_R8 instead)."""
-    from gan_deeplearning4j_spark import queries_r7
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50, (
-        f"{len(never)} unverified entries exceed the ~50/round driver "
-        "window; the tail would slip to the next round"
-    )
-    # unverified entries form a strict prefix (also checked by the
-    # ordering test, re-asserted here so this test fails self-contained)
-    assert ordered[: len(never)] == never
-    # the 20 round-7 registrations must be inside the window until
-    # CORRECTNESS_r07 lands (after which they carry evidence and leave
-    # `never` — both states are legal here)
-    for name in queries_r7.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r7_wave_is_registered():
-    """The round-7 wave flipped from staged to registered: every STAGED
-    name is live in the registry with its oracle attached."""
-    from gan_deeplearning4j_spark import queries_r7
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r7.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    # every r7 entry carries an oracle (hash-grade on registration)
-    for name, (fn, oracle, headline, doc) in queries_r7.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-
-
-def test_r8_wave_is_registered():
-    """The round-8 wave flipped from staged to registered: every STAGED
-    name is live in the registry with its oracle attached."""
-    from gan_deeplearning4j_spark import queries_r8
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r8.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    # every r8 entry carries an oracle (hash-grade on registration)
-    for name, (fn, oracle, headline, doc) in queries_r8.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-
-
-def test_r8_driver_window_covers_every_unverified_entry():
-    """Round-8 window contract: every entry without a green driver row must
-    sit inside the first 50 `queries()` positions — the driver checks
-    ~50/round, so this guarantees CORRECTNESS_r08 gives the whole tail a
-    row. Unverified entries = the 34 newly registered round-8 queries plus
-    any round-8 live additions. Fails if a new query lands ahead of the
-    tail or the tail outgrows the window (stage behind SPARK_GRAFT_R9
-    instead)."""
-    from gan_deeplearning4j_spark import queries_r8
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50, (
-        f"{len(never)} unverified entries exceed the ~50/round driver "
-        "window; the tail would slip to the next round"
-    )
-    # unverified entries form a strict prefix (also checked by the
-    # ordering test, re-asserted here so this test fails self-contained)
-    assert ordered[: len(never)] == never
-    # the 34 round-8 registrations must be inside the window until
-    # CORRECTNESS_r08 lands (after which they carry evidence and leave
-    # `never` — both states are legal here)
-    for name in queries_r8.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r9_wave_is_registered():
-    """The round-9 wave flipped from staged to registered: every STAGED
-    name is live in the registry with its oracle attached."""
-    from gan_deeplearning4j_spark import queries_r9
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r9.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    # every r9 entry carries an oracle (hash-grade on registration)
-    for name, (fn, oracle, headline, doc) in queries_r9.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-
-
-def test_r9_driver_window_covers_every_unverified_entry():
-    """Round-9 window contract: every entry without a green driver row must
-    sit inside the first 50 `queries()` positions — the driver checks
-    ~50/round, so this guarantees CORRECTNESS_r09 gives the whole tail a
-    row. Unverified entries = the 19 newly registered round-9 queries plus
-    any round-9 live additions. Fails if a new query lands ahead of the
-    tail or the tail outgrows the window (stage behind SPARK_GRAFT_R10
-    instead)."""
-    from gan_deeplearning4j_spark import queries_r9
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50, (
-        f"{len(never)} unverified entries exceed the ~50/round driver "
-        "window; the tail would slip to the next round"
-    )
-    # unverified entries form a strict prefix (also checked by the
-    # ordering test, re-asserted here so this test fails self-contained)
-    assert ordered[: len(never)] == never
-    # the 19 round-9 registrations must be inside the window until
-    # CORRECTNESS_r09 lands (after which they carry evidence and leave
-    # `never` — both states are legal here)
-    for name in queries_r9.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r10_wave_is_registered():
-    """The round-10 wave flipped from staged to registered: every STAGED
-    name is live in the registry with its oracle attached."""
-    from gan_deeplearning4j_spark import queries_r10
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r10.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    # every r10 entry carries an oracle (hash-grade on registration)
-    for name, (fn, oracle, headline, doc) in queries_r10.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-
-
-def test_r10_driver_window_covers_every_unverified_entry():
-    """Round-10 window contract: every entry without a green driver row must
-    sit inside the first 50 `queries()` positions — the driver checks
-    ~50/round, so this guarantees CORRECTNESS_r10 gives the whole tail a
-    row. Unverified entries = the 17 newly registered round-10 queries plus
-    any round-10 live additions. Fails if a new query lands ahead of the
-    tail or the tail outgrows the window (stage behind SPARK_GRAFT_R11
-    instead)."""
-    from gan_deeplearning4j_spark import queries_r10
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50, (
-        f"{len(never)} unverified entries exceed the ~50/round driver "
-        "window; the tail would slip to the next round"
-    )
-    # unverified entries form a strict prefix (also checked by the
-    # ordering test, re-asserted here so this test fails self-contained)
-    assert ordered[: len(never)] == never
-    # the 17 round-10 registrations must be inside the window until
-    # CORRECTNESS_r10 lands (after which they carry evidence and leave
-    # `never` — both states are legal here)
-    for name in queries_r10.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r11_wave_is_registered():
-    """The round-11 wave flipped from staged to registered: every STAGED
-    name is live in the registry with its oracle attached."""
-    from gan_deeplearning4j_spark import queries_r11
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r11.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    # every r11 entry carries an oracle (hash-grade on registration)
-    for name, (fn, oracle, headline, doc) in queries_r11.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-
-
-def test_r11_driver_window_covers_every_unverified_entry():
-    """Round-11 window contract: every entry without a green driver row must
-    sit inside the first 50 `queries()` positions — the driver checks
-    ~50/round, so this guarantees CORRECTNESS_r11 gives the whole tail a
-    row. Unverified entries = the 17 newly registered round-11 queries plus
-    any round-11 live additions. Fails if a new query lands ahead of the
-    tail or the tail outgrows the window (stage behind the CURRENT
-    staging gate — SPARK_GRAFT_R13 as of round 11 — instead)."""
-    from gan_deeplearning4j_spark import queries_r11
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50, (
-        f"{len(never)} unverified entries exceed the ~50/round driver "
-        "window; the tail would slip to the next round"
-    )
-    assert ordered[: len(never)] == never
-    # the 17 round-11 registrations must be inside the window until
-    # CORRECTNESS_r11 lands (after which they carry evidence and leave
-    # `never` — both states are legal here)
-    for name in queries_r11.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r12_wave_is_registered():
-    """The round-11 live additions (queries_r12.py, certified under the
-    SPARK_GRAFT_R12 gate then flipped mid-round): every STAGED name is
-    live with its EXACT oracle attached — `register_all` silently skips
-    colliding names, so the oracle equality check is what catches a
-    name collision with an older query (it caught two in round 11)."""
-    from gan_deeplearning4j_spark import queries_r12
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r12.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    for name, (fn, oracle, headline, doc) in queries_r12.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-        assert REGISTRY[name].fn is fn, name
-
-
-def test_r12_driver_window_covers_every_unverified_entry():
-    """Round-11 window contract after the live additions: never-green =
-    17 r11 + 11 r12 = 28 entries, all inside the first 50 positions."""
-    from gan_deeplearning4j_spark import queries_r12
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50
-    assert ordered[: len(never)] == never
-    for name in queries_r12.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r11_staged_oracles_bind_in_duckdb(sf_dir):
-    """Staged round-11 oracles must keep binding in DuckDB (EXPLAIN only)
-    even though they are not yet in the live registry — catches SQL
-    bitrot a round early."""
-    from gan_deeplearning4j_spark import queries_r11
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    bad = []
-    for name, (fn, oracle, headline, doc) in queries_r11.STAGED.items():
-        if not oracle:
-            continue
-        try:
-            con.sql("EXPLAIN " + oracle)
-        except Exception as exc:  # noqa: BLE001
-            bad.append((name, str(exc)[:120]))
-    assert not bad, bad
-
-
-def test_r13_wave_is_registered():
-    """The round-12 flip (r11 verdict ask #2): every queries_r13 STAGED
-    name is live with its EXACT oracle attached — `register_all` silently
-    skips colliding names, so the oracle equality check is what catches a
-    name collision with an older query."""
-    from gan_deeplearning4j_spark import queries_r13
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r13.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    for name, (fn, oracle, headline, doc) in queries_r13.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-        assert REGISTRY[name].fn is fn, name
-
-
-def test_r13_driver_window_covers_every_unverified_entry():
-    """Round-12 window contract after the flips: never-green = 8 r13
-    queries + the 5 round-12 bracket-oracle promotions (whose old
-    rows-only evidence stops counting once promoted), all inside the
-    first 50 positions."""
-    from gan_deeplearning4j_spark import queries_r13
-    from gan_deeplearning4j_spark.queries import (
-        REGISTRY,
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50
-    assert ordered[: len(never)] == never
-    for name in queries_r13.STAGED:
-        assert name in ev or name in never[:50], name
-    # the 5 promotions must be re-drawn: rows-only evidence no longer
-    # counts for an oracled query
+def test_driver_window_covers_every_unverified_entry():
+    """Window contract: the driver checks the first ~50 `queries()` entries
+    per round, so every entry without a green driver row must sit inside
+    them — never-green entries form a strict prefix of at most 50."""
+    assert_wave_in_window()
+    # the five bracket-oracle promotions stay oracled: their old
+    # rows-only evidence must not count as green for an oracled query
     for name in ("approx_quantiles", "approx_distinct",
                  "heavy_hitters_approx", "hll_mergeable_daily_users",
                  "gan_grid_inference"):
         assert REGISTRY[name].oracle is not None, name
-        assert name in ev or name in never[:50], name
+
+
+def test_register_rejects_duplicate_name():
+    """A second registration under a live name raises and leaves the
+    registry untouched — an overwrite would ship one query under another
+    query's name."""
+    from gan_deeplearning4j_spark.registry import register
+
+    before = dict(REGISTRY)
+    try:
+        with pytest.raises(ValueError, match="argmax_accuracy"):
+            register("argmax_accuracy", oracle="SELECT 1",
+                     doc="duplicate")(lambda spark, sf_dir: None)
+        assert list(REGISTRY.items()) == list(before.items())
+    finally:
+        REGISTRY.clear()
+        REGISTRY.update(before)
+
+
+def test_r7_wave_is_registered():
+    """Every queries_r7 query is live in the registry with an oracle and
+    a doc, registered with the module's own builder object."""
+    assert_wave_registered("queries_r7")
+
+
+def test_r7_driver_window_covers_every_unverified_entry():
+    """Every unverified queries_r7 query sits inside the driver's first
+    50 `queries()` positions."""
+    assert_wave_in_window("queries_r7")
+
+
+def test_r8_wave_is_registered():
+    """Every queries_r8 query is live in the registry with an oracle and
+    a doc, registered with the module's own builder object."""
+    assert_wave_registered("queries_r8")
+
+
+def test_r8_driver_window_covers_every_unverified_entry():
+    """Every unverified queries_r8 query sits inside the driver's first
+    50 `queries()` positions."""
+    assert_wave_in_window("queries_r8")
+
+
+def test_r9_wave_is_registered():
+    """Every queries_r9 query is live in the registry with an oracle and
+    a doc, registered with the module's own builder object."""
+    assert_wave_registered("queries_r9")
+
+
+def test_r9_driver_window_covers_every_unverified_entry():
+    """Every unverified queries_r9 query sits inside the driver's first
+    50 `queries()` positions."""
+    assert_wave_in_window("queries_r9")
+
+
+def test_r10_wave_is_registered():
+    """Every queries_r10 query is live in the registry with an oracle and
+    a doc, registered with the module's own builder object."""
+    assert_wave_registered("queries_r10")
+
+
+def test_r10_driver_window_covers_every_unverified_entry():
+    """Every unverified queries_r10 query sits inside the driver's first
+    50 `queries()` positions."""
+    assert_wave_in_window("queries_r10")
+
+
+def test_r11_wave_is_registered():
+    """Every queries_r11 query is live in the registry with an oracle and
+    a doc, registered with the module's own builder object."""
+    assert_wave_registered("queries_r11")
+
+
+def test_r11_driver_window_covers_every_unverified_entry():
+    """Every unverified queries_r11 query sits inside the driver's first
+    50 `queries()` positions."""
+    assert_wave_in_window("queries_r11")
+
+
+def test_r11_staged_oracles_bind_in_duckdb(sf_dir):
+    """Every queries_r11 oracle binds in DuckDB (EXPLAIN only)."""
+    assert_wave_oracles_bind("queries_r11", sf_dir)
+
+
+def test_r12_wave_is_registered():
+    """Every queries_r12 query is live in the registry with an oracle and
+    a doc, registered with the module's own builder object."""
+    assert_wave_registered("queries_r12")
+
+
+def test_r12_driver_window_covers_every_unverified_entry():
+    """Every unverified queries_r12 query sits inside the driver's first
+    50 `queries()` positions."""
+    assert_wave_in_window("queries_r12")
+
+
+def test_r13_wave_is_registered():
+    """Every queries_r13 query is live in the registry with an oracle and
+    a doc, registered with the module's own builder object."""
+    assert_wave_registered("queries_r13")
+
+
+def test_r13_driver_window_covers_every_unverified_entry():
+    """Every unverified queries_r13 query sits inside the driver's first
+    50 `queries()` positions."""
+    assert_wave_in_window("queries_r13")
+
+
+# Ordered registry fingerprint: name, oracle, headline flag, doc, defining
+# function and its bytecode, in REGISTRY order.
+_FINGERPRINT = r"""
+import hashlib
+from gan_deeplearning4j_spark.queries import REGISTRY
+h = hashlib.sha256()
+for name, q in REGISTRY.items():
+    h.update("\x1f".join([name, q.oracle or "", str(q.headline), q.doc,
+                           q.fn.__module__, q.fn.__qualname__]).encode()
+             + q.fn.__code__.co_code + b"\x1e")
+print(len(REGISTRY), h.hexdigest()[:16])
+"""
 
 
 def test_direct_import_of_any_query_module_works():
-    """Import-order regression (round-12 catch): importing ANY queries_r*
-    module directly — before gan_deeplearning4j_spark.queries — must fully
-    populate the registry. The flip pattern that breaks this is queries.py
-    calling <module>.register_all() (an attribute access on a
-    partially-initialized module through the circular import); the safe
-    pattern is unconditional self-registration at each module's bottom."""
-    import os
+    """Whichever query module a fresh interpreter imports first, the
+    registry ends up complete and in the same order: same names, oracles,
+    docs and builders, position by position."""
     import pathlib
     import subprocess
     import sys
+    from concurrent.futures import ThreadPoolExecutor
 
-    from gan_deeplearning4j_spark.queries import REGISTRY
+    from gan_deeplearning4j_spark.queries import QUERY_MODULES
 
-    full = len(REGISTRY)
-    # queries_ext and queries_r7 are excluded BY DESIGN: queries_r8
-    # consumes names from BOTH at registration time
-    # (queries_ext._pq_fixed_oracle, queries_r7._BPE_FIX_BEST...), so an
-    # ext- or r7-FIRST import cannot complete (the provider is still
-    # partially initialized when r8 registers). The documented rule for
-    # those two is "import the package (or queries) first"; every module
-    # nothing name-imports from must support BOTH orders.
-    mods = ["queries_r4", "queries_r5", "queries_r6",
-            "queries_r8", "queries_r9", "queries_r10",
-            "queries_r11", "queries_r12", "queries_r13", "queries_r14",
-            "queries_r15", "queries_r16"]
-    for mod in mods:
-        out = subprocess.run(
-            [sys.executable, "-c",
-             f"import gan_deeplearning4j_spark.{mod};"
-             "from gan_deeplearning4j_spark.queries import REGISTRY;"
-             "print(len(REGISTRY))"],
-            env={k: v for k, v in os.environ.items()
-                 if not k.startswith("SPARK_GRAFT_R")},
+    mods = ["gan_deeplearning4j_spark.queries"] + [
+        m.__name__ for m in QUERY_MODULES]
+    assert len(mods) == 16
+
+    def run(mod):
+        return subprocess.run(
+            [sys.executable, "-c", f"import {mod}\n" + _FINGERPRINT],
             cwd=str(pathlib.Path(__file__).resolve().parents[1]),
-            capture_output=True, text=True, timeout=120,
+            capture_output=True, text=True, timeout=300,
         )
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        outs = dict(zip(mods, pool.map(run, mods)))
+    for mod, out in outs.items():
         assert out.returncode == 0, (mod, out.stderr[-1500:])
-        assert out.stdout.strip() == str(full), (mod, out.stdout)
+    prints = {mod: out.stdout.strip() for mod, out in outs.items()}
+    want = prints["gan_deeplearning4j_spark.queries"]
+    assert want.split()[0] == str(len(REGISTRY)), want
+    assert {m: p for m, p in prints.items() if p != want} == {}, want
